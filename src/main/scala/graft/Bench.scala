@@ -38,7 +38,7 @@ import org.apache.spark.sql.SparkSession
   * per-query times to SPARK_GRAFT_RESULT_FILE. If the fork fails the
   * in-suite numbers stand (worst case: an honest over-2× entry).
   * The one-line JSON keeps `queries` FIRST and the verdict fields
-  * (`retry_isolated`, `over2x_after_retry`, totals) LAST: the
+  * (`retry_isolated`, `over2x_after_retry`, `failed`, totals) LAST: the
   * driver's capture keeps the tail of the line, so the diagnosis
   * survives even when the full per-query map is truncated. The
   * complete record (first-run series, suite order, baseline ratios,
@@ -158,7 +158,11 @@ object Bench {
 
     def jmap(m: Seq[(String, Double)]): String =
       m.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
+    // `total` sums the queries that ran; the ones that threw are
+    // named in `failed` (summary, detail) and fail the run
     val total = results.map(_._2._2).filter(_ >= 0).sum
+    val failed = results.collect { case (n, (first, _)) if first < 0 => n }
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
 
     val detail = names.zipWithIndex
       .map { case (n, i) =>
@@ -174,13 +178,14 @@ object Bench {
     if (only.isEmpty)
       Files.writeString(
         Paths.get("BENCH_DETAIL.json"),
-        f"""{"sf":"$sfDir","order":"alphabetical","retry":"fresh-jvm","total_best":$total%.3f,"queries":\n$detail}\n""")
+        f"""{"sf":"$sfDir","order":"alphabetical","retry":"fresh-jvm","total_best":$total%.3f,"failed":$failedJson,"queries":\n$detail}\n""")
 
     // queries first, verdict fields last — the tail survives capture
     val summary =
       f"""{"metric":"total","queries":${jmap(results.map { case (n, r) => n -> r._2 })},""" +
         f""""retry_isolated":${jmap(retries.toSeq.sortBy(_._1))},""" +
         f""""over2x_after_retry":${stillOver.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
+        f""""failed":$failedJson,""" +
         f""""n_queries":${results.size},"value":$total%.3f,"unit":"sec","sf":"$sfDir"}"""
     println(summary)
     // the driver's stdout-tail capture has truncated this line two
@@ -190,6 +195,7 @@ object Bench {
     if (only.isEmpty)
       Files.writeString(Paths.get("BENCH_SUMMARY.json"), summary + "\n")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 
   /** Fork a fresh JVM (same classpath + runtime flags as this one) that

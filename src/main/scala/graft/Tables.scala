@@ -46,13 +46,6 @@ object Tables {
     }
   }
 
-  /** `ts` as a µs TimestampType column (for streaming / window-by-time).
-    * NOTE: integer `div`, not `/` — ns epochs (~1.7e18) overflow double
-    * precision, so float division would corrupt low-order digits.
-    */
-  def eventsWithTimestamp(spark: SparkSession, dir: String): DataFrame =
-    events(spark, dir).withColumn("ts_us", timestamp_micros(expr("ts div 1000")))
-
   /** Raise a frame's partition count to the session's default
     * parallelism ahead of a COMPUTE-HEAVY stage (r13 optimization
     * round, guide §2/§6): parquet scan parallelism is bounded by
@@ -87,20 +80,4 @@ object Tables {
       if (df.rdd.getNumPartitions >= p) df else df.repartition(p)
     }
   }
-
-  /** Hash-repartition on `cols` with an EXPLICIT partition count (the
-    * session default parallelism), pinning the task count of the
-    * stage that follows (r13 optimization round, guide §2.5): AQE's
-    * post-shuffle coalescing sizes partitions by the exchange's
-    * OUTPUT bytes, which under-parallelizes stages whose cost is
-    * dominated by downstream fan-out — measured on the co-purchase
-    * basket→pair explosion, which AQE squeezed onto 4 tasks (5 s of
-    * CPU) because the pre-explosion shuffle was only ~5 MB. An
-    * explicit-N repartition is never coalesced. Results are
-    * partition-invariant; the exchange replaces the aggregation
-    * exchange that followed anyway (same key), so no extra shuffle
-    * at scale.
-    */
-  def fanOutBy(df: DataFrame, cols: org.apache.spark.sql.Column*): DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism, cols: _*)
 }

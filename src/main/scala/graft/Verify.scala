@@ -18,6 +18,10 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    // a query that throws writes no output directory, so the oracle
+    // compare never sees it: collect the names and fail the run
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    failed ++= only.getOrElse(Set.empty).diff(SparkEntry.queries.keySet).toSeq.sorted
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -25,6 +29,7 @@ object Verify {
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed += name
       }
       // release the finished query's cache AND checkpoint blocks —
       // clearCache only covers the CacheManager; localCheckpoint blocks
@@ -50,5 +55,9 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

@@ -1624,7 +1624,7 @@ private[graft] trait SparkEntryOracleHelpers {
              UNION ALL SELECT dst AS src, src AS dst FROM ${name}d))"""
 
   /** Greedy-descent hop `i` over upper graph `g` (`Similarity
-    * .hnswDescend`'s replay): expand `d${i-1}`'s out-neighbors, keep
+    * .hnswEntry`'s replay): expand `d${i-1}`'s out-neighbors, keep
     * the argmax-rounded-cosine candidate per query (ties to the
     * smaller vec_id). Expects `e`(vec_id, emb) and
     * `q`(query_id, q_emb) CTEs in scope.
@@ -1741,7 +1741,7 @@ private[graft] trait SparkEntryOracleHelpers {
     * rounds of expand/score/top-`beam` from the per-query entry CTE,
     * accumulating the visited set; the final CTE `${pfx}out` is the
     * per-query top-10 of everything visited, self excluded
-    * (`Similarity.beamWalk`'s exact replay).
+    * (the exact replay of `Similarity.beamWalk` ranked by `top10`).
     */
   protected def hnswWalkCtes(
       pfx: String,

@@ -85,25 +85,6 @@ object GraftFunctions {
       },
       "built-in")
     reg.createOrReplaceTempFunction(
-      "robust_prune",
-      args => {
-        checkArity("robust_prune", args, 4)
-        val lits = args.drop(1).map {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v.toLong
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v
-          case other =>
-            throw new IllegalArgumentException(
-              s"robust_prune: r, alphaNum, alphaDen must be integer literals, got $other")
-        }
-        // r14 (ADVICE): reject an out-of-Int-range r instead of
-        // silently truncating it
-        if (lits(0) < 1 || lits(0) > Int.MaxValue)
-          throw new IllegalArgumentException(
-            s"robust_prune: r must be a positive Int, got ${lits(0)}")
-        RobustPruneExpr(args.head, lits(0).toInt, lits(1), lits(2))
-      },
-      "built-in")
-    reg.createOrReplaceTempFunction(
       "robust_prune_idx",
       args => {
         checkArity("robust_prune_idx", args, 6)

@@ -2,31 +2,22 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** DiskANN RobustPrune (Subramanya et al. 2019, Alg. 2) over ONE
-  * node's candidate list, run natively in a single pass (r13
-  * optimization round). The former DataFrame form ran the r selection
-  * rounds as r sequential distributed jobs — per round one window
-  * argmax + two corpus joins + an eager checkpoint, ~16 stage-jobs per
-  * prune invocation and three invocations per Vamana build, which the
-  * profiler showed dominating `ann_vamana` (229 stage-jobs at ~175 ms
-  * each). Here the per-node loop is the same arithmetic on the same e6
-  * integer grid — argmax by (cos_e6 desc, c asc), then drop every
+  * node's candidate list, run natively in a single pass: the per-node
+  * loop is the arithmetic of the unrolled DataFrame form on the same
+  * e6 integer grid — argmax by (cos_e6 desc, c asc), then drop every
   * remaining v with α·(1e6 − cosE6(c*, v)) ≤ (1e6 − cosE6(p, v)),
   * cross-multiplied exactly — so the emitted (c, cos_e6, rank) rows
-  * are bit-identical to the unrolled form (the DuckDB oracle replays
-  * the unrolled CTEs unchanged and still hash-matches; VamanaSpec pins
-  * the α invariant and selection-order monotonicity on this path).
+  * are bit-identical to it (the DuckDB oracle replays the unrolled
+  * CTEs and hash-matches; VamanaSpec pins the α invariant and
+  * selection-order monotonicity on this path).
   *
-  * Input: array<struct<c: bigint, cos_e6: bigint, emb: array<float>>>
-  * (one node's scored candidates, any order; (c) unique per the
-  * callers' upstream distinct — duplicate c of a pick is dropped
-  * exactly like the old `c != cstar` filter).
   * Output: array<struct<c: bigint, cos_e6: bigint, rank: bigint>>,
   * rank = 1-based selection order, ≤ r entries, stops early when the
   * candidate set empties (the window-over-empty behaviour).
@@ -37,8 +28,7 @@ import org.apache.spark.sql.types._
   */
 private[functions] object RobustPrune {
   /** `CAST(floor(cosine_sim(a, b) * 1000000 + 0.5) AS BIGINT)` — the
-    * exact expression-grid quantization of [[CosineSim]]'s value,
-    * shared by both prune forms.
+    * exact expression-grid quantization of [[CosineSim]]'s value.
     */
   def cosE6(x: ArrayData, y: ArrayData): Long = {
     val n = math.min(x.numElements(), y.numElements())
@@ -51,9 +41,8 @@ private[functions] object RobustPrune {
     math.floor(cos * 1000000.0 + 0.5).toLong
   }
 
-  /** The shared selection loop (Alg. 2): r rounds of argmax by
-    * (cos_e6 desc, c asc) + α-dominance drop, identical arithmetic in
-    * both expression forms. Mutates `alive`; returns the picks.
+  /** The selection loop (Alg. 2): r rounds of argmax by
+    * (cos_e6 desc, c asc) + α-dominance drop. Returns the picks.
     */
   def select(
       cs: Array[Long],
@@ -111,63 +100,14 @@ private[functions] object RobustPrune {
     containsNull = false)
 }
 
-case class RobustPruneExpr(child: Expression, r: Int, alphaNum: Long, alphaDen: Long)
-    extends UnaryExpression
-    with CodegenFallback {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StructType(Array(a, b, c)), _)
-        if a.dataType == LongType && b.dataType == LongType &&
-          (c.dataType == ArrayType(FloatType, false) ||
-            c.dataType == ArrayType(FloatType, true)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other =>
-      TypeCheckResult.TypeCheckFailure(
-        s"robust_prune expects array<struct<bigint, bigint, array<float>>>, got " +
-          other.simpleString)
-  }
-
-  override def dataType: DataType = RobustPrune.outputType
-
-  override def prettyName: String = "robust_prune"
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val cs = new Array[Long](n)
-    val cos = new Array[Long](n)
-    val embs = new Array[ArrayData](n)
-    var i = 0
-    while (i < n) {
-      val st = arr.getStruct(i, 3)
-      cs(i) = st.getLong(0)
-      cos(i) = st.getLong(1)
-      embs(i) = st.getArray(2)
-      i += 1
-    }
-    new GenericArrayData(RobustPrune.select(cs, cos, embs, r, alphaNum, alphaDen))
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): RobustPruneExpr =
-    copy(child = newChild)
-}
-
-/** [[RobustPruneExpr]] with CORPUS-LOOKUP embeddings (r14, guide
-  * §2.3/§8 "move heavy bytes once"): the collect-form prune shipped
-  * every candidate's full embedding through the collect_list shuffle —
-  * Σ_p |cand_p| copies of vectors the plan had ALREADY broadcast once
-  * as the corpus join side (measured on `ann_vamana`'s round-2 prune:
-  * a 193 MB exchange + ~100 s of aggregate-copy CPU for a 512 KB
-  * corpus; each vector shipped ~200×). This form takes the candidate
-  * list as bare ids, the corpus ONCE as a vec_id-sorted
+/** `robust_prune_idx(p, cands, corpus, r, alphaNum, alphaDen)`: the
+  * [[RobustPrune]] loop with CORPUS-LOOKUP embeddings. The candidate
+  * list is bare ids and the corpus comes ONCE as a vec_id-sorted
   * array<struct<v, emb>> column (a broadcast single-row frame — the
-  * same O(corpus) broadcast footprint as the cosE6 scoring joins), and
-  * computes both the (p, c) scores and the candidate-candidate
-  * dominance cosines inside, via binary search on v. Selection is the
-  * shared [[RobustPrune.select]] loop — picks, scores and ranks are
-  * bit-identical to the collect form (order-independent argmax over
-  * the same e6 grid), so the unchanged DuckDB oracle CTEs still
-  * hash-match.
+  * same O(corpus) broadcast footprint as the cosE6 scoring joins), so
+  * the prune exchange carries ids, never embeddings. Both the (p, c)
+  * scores and the candidate-candidate dominance cosines are computed
+  * inside, via binary search on v.
   *
   * Inputs: p bigint, cands array<bigint> (unique per the callers'
   * upstream distinct), corpus array<struct<v: bigint, emb:

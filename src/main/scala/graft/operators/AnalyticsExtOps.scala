@@ -392,11 +392,7 @@ private[graft] trait AnalyticsExtOps { this: AnalyticsExt.type =>
     // trajectory array — the r13 form re-ran the recurrence from
     // scratch per prefix (`transform` × `aggregate(slice(...))`),
     // O(days²) fold steps for an O(days) recurrence, and was the
-    // suite's slowest non-ANN query by construction. The r13
-    // `fanOutBy(l_partkey)` pin is gone with it: it defeated AQE
-    // coalescing and made the tiny fold pay 32-way scheduling/GC
-    // (driver-measured 3.6 s → 13.4 s); with a linear fold the
-    // default data-sized partitioning is right at every scale.
+    // suite's slowest non-ANN query by construction.
     daily
       .groupBy("l_partkey")
       .agg(expr("sort_array(collect_list(named_struct('day', day, 'y', y)))").as("steps"))

@@ -2572,11 +2572,6 @@ private[graft] trait AnalyticsExtStats { this: AnalyticsExt.type =>
     * caller's checkpoint/cache hygiene stays self-contained.
     */
   private[operators] def coPurchasePairs(spark: SparkSession, dir: String, minSupport: Int): DataFrame = {
-    // r14: the r13 fanOutBy(l_orderkey) pin is gone — it bought
-    // nothing on its motivating query (q_copurchase 1.73 → 1.98 s at
-    // 32c, driver-measured) and pinned every iterative consumer of
-    // this build (label_prop, betweenness, closeness) at 32-way on
-    // tiny data. AQE sizes the explosion from bytes, correct at scale.
     val po =
       Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_partkey")).distinct()
     po.select(col("l_orderkey"), col("l_partkey").as("part_a"))

@@ -1050,9 +1050,6 @@ object Scale {
     * planted corpus — the frame [[hstOutliers]] ranks and
     * [[hstOutlierEval]] thresholds.
     */
-  private[graft] def hstScoresPublic(spark: SparkSession, dir: String): DataFrame =
-    hstScores(spark, dir)
-
   private def hstScores(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val corpus = hstCorpus(spark, dir)

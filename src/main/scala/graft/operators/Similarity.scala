@@ -1615,18 +1615,6 @@ object Similarity {
       .select(kept :+ col("e.s").as("s") :+ col("e.sv").as("sv"): _*)
   }
 
-  /** (vec_id, s, sv): the corpus exploded into M quantized subvectors
-    * per vector; `quant` picks plain ([[quantE4]]) or rotated
-    * ([[quantE4Rot]]) quantization.
-    */
-  private def pqSubvectors(
-      vecs: DataFrame,
-      quant: Column => Column = quantE4): DataFrame =
-    pqSubvectorsOf(
-      vecs.select(col("vec_id"), quant(col("embedding")).as("eq")),
-      "eq",
-      Seq("vec_id"))
-
   /** Integer squared-L2 between the `sv` subvector and the `cw`
     * codeword (e4² units) — a zip/fold over 16 BIGINTs, exact and
     * order-free by construction.
@@ -2178,11 +2166,8 @@ object Similarity {
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val graph = exactKnnGraph(spark, dir, k).select("src", "dst").cp(eager = false)
     val queries = queryVectors(spark, dir)
-    val entry = e.agg(min("vec_id").as("vec_id"))
-    // r13 opt round: the inline loop was [[beamWalkVisited]] verbatim —
-    // share it (and its one-exchange-per-hop prune) instead
-    val ent = queries.select(col("query_id")).crossJoin(broadcast(entry))
-    (beamWalk(e, graph, queries, ent, beam, hops), Seq.empty)
+    val ent = entryPerQuery(queries, e.agg(min("vec_id").as("vec_id")))
+    (beamWalk(e, queries, ent, Seq.fill(hops)(graph), lit(beam)).top10(), Seq.empty)
   }
 
   /** The deterministic HNSW level of every vector: P(level ≥ l) = 4^-l
@@ -2193,7 +2178,7 @@ object Similarity {
     * occupancy a third layer is non-empty only past ~10⁶ vectors, and
     * adding one is this same expression one digit deeper.
     */
-  private def hnswLevels(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def hnswLevels(spark: SparkSession, dir: String): DataFrame =
     Tables
       .embeddings(spark, dir)
       .select(
@@ -2217,7 +2202,7 @@ object Similarity {
     * (the layer sets are plain vector frames, nothing here assumes the
     * all-pairs construction).
     */
-  private def knnAmong(sub: DataFrame, m: Int): DataFrame = {
+  private[graft] def knnAmong(sub: DataFrame, m: Int): DataFrame = {
     val w = Window.partitionBy("src").orderBy(col("cos").desc, col("dst"))
     // fanOut: same single-task n² kernel as [[exactKnnGraph]]
     Tables
@@ -2236,36 +2221,23 @@ object Similarity {
     * at all. This is the structural difference that buys HNSW its
     * recall over #398's directed walk, independent of the layering.
     */
-  private def symmetrize(g: DataFrame): DataFrame =
+  private[graft] def symmetrize(g: DataFrame): DataFrame =
     g.unionAll(g.select(col("dst").as("src"), col("src").as("dst"))).distinct()
 
-  /** The layer-0 beam walk shared by [[nswSearch]]-style searches:
-    * from a per-query entry frame, `hops` rounds of expand-score-prune
-    * at width `beam`, returning the top-10 of everything visited
-    * (self excluded). Factored out so [[hnswSearch]] and the beam
-    * scorecard replay the identical trajectory from different entries.
+  /** The per-query entry frame (query_id, vec_id): every query
+    * starts at the one node of `node`.
     */
-  private def beamWalk(
-      e: DataFrame,
-      graph: DataFrame,
-      queries: DataFrame,
-      entry: DataFrame,
-      beam: Int,
-      hops: Int)(implicit scope: Lineage.Scope): DataFrame =
-    rankVisited(e, queries, beamWalkVisited(e, graph, queries, entry, beam, hops))
+  private def entryPerQuery(queries: DataFrame, node: DataFrame): DataFrame =
+    queries.select(col("query_id")).crossJoin(broadcast(node.select(col("vec_id"))))
 
   /** Top-`limit` DISTINCT `vec_id`s per partition of a scored frame,
     * ranked by (cos desc, vec_id) — the walk family's prune/rank
-    * primitive, duplicate-tolerant in ONE window pass (r13 opt round).
-    * A duplicated (partition, vec_id) row carries the identical cos
-    * (cos is a function of the pair), so duplicates sort adjacent:
-    * `dense_rank` counts distinct vec_ids exactly as `row_number` did
-    * over pre-distincted input, and the `lag` test keeps one instance
-    * per vec_id. This replaces the old two-exchange `distinct()` +
-    * window shape with a single exchange — plan change only; the
-    * selected set, the emitted rows, and the `rank` values are
-    * bit-identical (`rank` = dense_rank = the old row_number, both
-    * rank distinct vec_ids in the same total order).
+    * primitive, duplicate-tolerant in ONE window pass. A duplicated
+    * (partition, vec_id) row carries the identical cos (cos is a
+    * function of the pair), so duplicates sort adjacent: `dense_rank`
+    * counts distinct vec_ids exactly as `row_number` does over
+    * pre-distincted input, and the `lag` test keeps one instance per
+    * vec_id. At limit 1 the kept row is the `row_number = 1` argmax.
     */
   private def topDistinct(scoredDf: DataFrame, partCols: Seq[String], limit: Column): DataFrame = {
     val w = Window.partitionBy(partCols.map(col): _*).orderBy(col("cos").desc, col("vec_id"))
@@ -2276,62 +2248,98 @@ object Similarity {
       .drop("prev_vid")
   }
 
-  /** The walk's raw visited pool (query_id, vec_id) — every node the
-    * `hops` expand-score-prune rounds touched. MAY CONTAIN DUPLICATES
-    * (r13 opt round: the per-hop `distinct()` of the accumulated pool
-    * bought nothing — the pool is only consumed after the loop — and
-    * cost one exchange + one checkpoint per hop; every consumer either
-    * dedupes downstream or ranks through the duplicate-tolerant
-    * [[topDistinct]]). The SET of visited nodes per query is unchanged.
-    * [[beamWalk]] ranks it to the top-10 answer; [[graphInsertFrame]]
-    * additionally uses it whole as the reverse-update candidate pool
-    * (the exact re-rank downstream means a wider offer can only
-    * improve the fold).
+  /** The walk scorer: each (query_id, tags…, vec_id) row of `df` with
+    * the rounded-1e-6 cosine of the node against its query.
     */
-  private def beamWalkVisited(
+  private def walkScored(
       e: DataFrame,
-      graph: DataFrame,
+      queries: DataFrame,
+      df: DataFrame,
+      tags: Seq[String]): DataFrame =
+    df.join(e, "vec_id")
+      .join(broadcast(queries), "query_id")
+      .select(
+        (("query_id" +: tags :+ "vec_id").map(col) :+
+          round(expr("cosine_sim(embedding, q_emb)"), 6).as("cos")): _*)
+
+  /** A [[beamWalk]]'s result. `beam` is the final beam
+    * (query_id, tags…, vec_id). `visited` is every node the hops
+    * touched, same shape, and MAY CONTAIN DUPLICATES: each consumer
+    * dedupes downstream or ranks through the duplicate-tolerant
+    * [[topDistinct]]. It is built on first use, so a walk that reads
+    * only its beam (the HNSW descent) cuts no pool. `top10` ranks a
+    * pool (by default `visited`) to the per-(query, tags) top-10 by
+    * rounded cosine, self excluded — the search answer
+    * (query_id, tags…, vec_id, cos, rank).
+    */
+  private[graft] final class Walk private[Similarity] (
+      e: DataFrame,
+      queries: DataFrame,
+      tags: Seq[String],
+      val beam: DataFrame,
+      pool: => DataFrame) {
+    lazy val visited: DataFrame = pool
+
+    def top10(from: DataFrame = visited): DataFrame =
+      topDistinct(
+        walkScored(e, queries, from, tags).filter(col("vec_id") =!= col("query_id")),
+        "query_id" +: tags,
+        lit(10))
+  }
+
+  /** The graph-ANN family's one hop loop. From `entry`
+    * (query_id, tags…, vec_id, in that column order), each hop expands
+    * the beam's out-neighbors in that hop's (src, dst) graph, scores
+    * every candidate against its query ([[walkScored]]) and keeps the
+    * top `width` distinct vec_ids per (query, tags). `width` is a
+    * column, so each row is pruned at its own tag. Every tag is in the
+    * scoring and prune partition key, so rows never mix across tags:
+    * a tagged walk is exactly the untagged walk run once per tag value.
+    * Per hop the plan is one lazy cut on the expanded candidate frame
+    * and one window exchange.
+    *
+    *   - search walk: no tags, `lit(beam)`, `hops` copies of one graph,
+    *     answer `top10()`;
+    *   - recall sweep ([[recallSweep]]): tag `beam`, `col("beam")`;
+    *   - HNSW descent ([[hnswEntry]]): `lit(1)`, one graph per hop
+    *     (upper layer first), only the final beam is read.
+    *
+    * Every score is the rounded-1e-6 cosine contract and ties break to
+    * the smaller vec_id, so the DuckDB unrolled-hop CTEs replay every
+    * trajectory bit-identically.
+    */
+  private[graft] def beamWalk(
+      e: DataFrame,
       queries: DataFrame,
       entry: DataFrame,
-      beam: Int,
-      hops: Int)(implicit scope: Lineage.Scope): DataFrame = {
-    import graft.operators.Lineage.CpOps
-    def scored(cand: DataFrame): DataFrame =
-      cand
-        .join(e, "vec_id")
-        .join(broadcast(queries), "query_id")
-        .select(
-          col("query_id"),
-          col("vec_id"),
-          round(expr("cosine_sim(embedding, q_emb)"), 6).as("cos"))
+      graphs: Seq[DataFrame],
+      width: Column,
+      tags: Seq[String] = Nil)(implicit scope: Lineage.Scope): Walk = {
+    val keys = "query_id" +: tags
     var beamDf = entry
-    var parts = Vector(beamDf.cp(false))
-    for (_ <- 1 to hops) {
+    var cands = Vector.empty[DataFrame]
+    for (g <- graphs) {
       val cand = beamDf
         .unionAll(
           beamDf
-            .join(graph, beamDf("vec_id") === graph("src"))
-            .select(col("query_id"), col("dst").as("vec_id")))
+            .join(g, beamDf("vec_id") === g("src"))
+            .select(keys.map(col) :+ col("dst").as("vec_id"): _*))
         .cp(false)
-      parts = parts :+ cand
-      beamDf = topDistinct(scored(cand), Seq("query_id"), lit(beam))
-        .select("query_id", "vec_id")
+      cands :+= cand
+      beamDf = topDistinct(walkScored(e, queries, cand, tags), keys, width)
+        .select((keys :+ "vec_id").map(col): _*)
     }
-    parts.reduce(_ unionAll _)
+    new Walk(e, queries, tags, beamDf, (entry.cp(false) +: cands).reduce(_ unionAll _))
   }
 
-  /** Fused multi-beam sweep (r13, the vamana-recall walk-cost task):
-    * the recall scorecards' beam points each re-ran the
-    * expand-score-prune loop over the SAME graph, paying hops × |beams|
-    * stage barriers. Here frontiers carry a `beam` tag and every hop
-    * expands, scores, and prunes ALL sweep points in ONE pass — the
-    * prune cutoff is the row's own tag (`rnk <= beam`), and rows never
-    * mix across tags, so each tagged trajectory is EXACTLY the
-    * per-point walk (the unchanged per-beam oracle replays still
-    * hash-match). Returns one (beam, n_hits) row per sweep point
-    * against `truth` (zero-hit beams included).
+  /** Recall@10 per sweep point of the walk from `ent` over `graph`
+    * against `truth` (query_id, vec_id): ONE walk tagged by `beam`, so
+    * every hop expands and scores all sweep points in one pass while
+    * each point's trajectory stays exactly its own walk. One
+    * (beam, n_truth, n_hits, recall_e6) row per point, zero-hit points
+    * included.
     */
-  private def beamSweepHits(
+  private def recallSweep(
       e: DataFrame,
       graph: DataFrame,
       queries: DataFrame,
@@ -2339,78 +2347,51 @@ object Similarity {
       beams: Seq[Int],
       hops: Int,
       truth: DataFrame)(implicit scope: Lineage.Scope): DataFrame = {
-    import graft.operators.Lineage.CpOps
     val spark = e.sparkSession
     import spark.implicits._
     val bdf = beams.map(_.toLong).toDF("beam")
-    def scored(cand: DataFrame): DataFrame =
-      cand
-        .join(e, "vec_id")
-        .join(broadcast(queries), "query_id")
-        .select(
-          col("query_id"),
-          col("beam"),
-          col("vec_id"),
-          round(expr("cosine_sim(embedding, q_emb)"), 6).as("cos"))
-    var beamDf = ent
-      .crossJoin(broadcast(bdf))
-      .select("query_id", "beam", "vec_id")
-    // r13 opt round: visited accumulates per-hop parts WITH duplicates
-    // (deduped once by the duplicate-tolerant [[topDistinct]] rank at
-    // the end) — the per-hop pool distinct + checkpoint and the
-    // pre-prune cand distinct were one-exchange-each plan overhead;
-    // the per-(query, beam) visited SET and the final ranking are
-    // bit-identical.
-    var parts = Vector(beamDf.cp(false))
-    for (_ <- 1 to hops) {
-      val cand = beamDf
-        .unionAll(
-          beamDf
-            .join(graph, beamDf("vec_id") === graph("src"))
-            .select(col("query_id"), col("beam"), col("dst").as("vec_id")))
-        .cp(false)
-      parts = parts :+ cand
-      beamDf = topDistinct(scored(cand), Seq("query_id", "beam"), col("beam"))
-        .select("query_id", "beam", "vec_id")
-    }
-    val visited = parts.reduce(_ unionAll _)
-    val hits = topDistinct(
-      scored(visited).filter(col("vec_id") =!= col("query_id")),
-      Seq("query_id", "beam"),
-      lit(10))
-      .select("query_id", "beam", "vec_id")
+    val entry = ent.crossJoin(broadcast(bdf)).select("query_id", "beam", "vec_id")
+    val hits = beamWalk(e, queries, entry, Seq.fill(hops)(graph), col("beam"), Seq("beam"))
+      .top10()
       .join(truth, Seq("query_id", "vec_id"), "left_semi")
       .groupBy("beam")
       .agg(count(lit(1)).as("n_hits"))
     bdf
       .join(hits, Seq("beam"), "left")
       .select(col("beam"), coalesce(col("n_hits"), lit(0L)).as("n_hits"))
+      .crossJoin(broadcast(truth.agg(count(lit(1)).as("n_truth"))))
+      .select(
+        col("beam"),
+        col("n_truth"),
+        col("n_hits"),
+        expr("n_hits * 1000000 div n_truth").as("recall_e6"))
   }
 
-  /** Per-query top-10 of a visited pool by rounded cosine, self
-    * excluded — [[beamWalk]]'s final ranking, shared with the fold's
-    * insertion path. Duplicate-tolerant ([[topDistinct]]): the pool
-    * may carry repeats; the ranked rows and `rank` values equal the
-    * old row_number-over-distinct form exactly.
+  /** The HNSW per-query layer-0 entry (query_id, vec_id): the
+    * symmetrized top-`mUpper` graphs among the level-≥2 and level-≥1
+    * members of `lv`, then a greedy descent — `descentHops` width-1
+    * hops per layer, top to bottom — from the top entry: min vec_id
+    * among level-2 nodes (min of all vectors if level 2 is empty).
     */
-  private def rankVisited(e: DataFrame, queries: DataFrame, visited: DataFrame): DataFrame =
-    topDistinct(
-      visited
-        .join(e, "vec_id")
-        .join(broadcast(queries), "query_id")
-        .select(
-          col("query_id"),
-          col("vec_id"),
-          round(expr("cosine_sim(embedding, q_emb)"), 6).as("cos"))
-        .filter(col("vec_id") =!= col("query_id")),
-      Seq("query_id"),
-      lit(10))
+  private[graft] def hnswEntry(
+      e: DataFrame,
+      lv: DataFrame,
+      queries: DataFrame,
+      mUpper: Int,
+      descentHops: Int)(implicit scope: Lineage.Scope): DataFrame = {
+    val g2 = symmetrize(knnAmong(lv.filter(col("lvl") >= 2), mUpper)).cp(false)
+    val g1 = symmetrize(knnAmong(lv.filter(col("lvl") >= 1), mUpper)).cp(false)
+    val top = lv.agg(
+      coalesce(min(when(col("lvl") >= 2, col("vec_id"))), min(col("vec_id"))).as("vec_id"))
+    val layers = Seq.fill(descentHops)(g2) ++ Seq.fill(descentHops)(g1)
+    beamWalk(e, queries, entryPerQuery(queries, top), layers, lit(1)).beam.cp(false)
+  }
 
   /** #414 HNSW hierarchical search (Malkov & Yashunin 2018): the #398
     * beam walk layered over geometrically-coarsened graphs. Every
     * vector draws a deterministic level ([[hnswLevels]]); layers 2 and
     * 1 hold exact top-`mUpper` graphs among their members; a query
-    * descends greedily — two beam-1 hops per upper layer, argmax
+    * descends greedily — [[DescentHops]] beam-1 hops per upper layer, argmax
     * rounded cosine, ties to the smaller vec_id — and hands the
     * layer-0 walk a PER-QUERY entry point near the query's
     * neighborhood, which is what buys recall at the same hops/beam
@@ -2442,49 +2423,9 @@ object Similarity {
     // r14: the layer-0 truth build and the upper-layer/descent chain
     // are independent — overlap them (guide §2.6)
     val (graph, ent) = Lineage.par2(
-      symmetrize(exactKnnGraph(spark, dir, k).select("src", "dst")).cp(false), {
-        val g2 = symmetrize(knnAmong(lv.filter(col("lvl") >= 2), mUpper)).cp(false)
-        val g1 = symmetrize(knnAmong(lv.filter(col("lvl") >= 1), mUpper)).cp(false)
-        hnswDescend(e, Seq(g2, g1), queries, lv)
-      })
-    (beamWalk(e, graph, queries, ent, beam, hops), Seq.empty)
-  }
-
-  /** Greedy upper-layer descent to a per-query layer-0 entry point —
-    * two beam-1 hops per layer, top to bottom.
-    */
-  private def hnswDescend(
-      e: DataFrame,
-      layers: Seq[DataFrame],
-      queries: DataFrame,
-      lv: DataFrame,
-      descentHops: Int = DescentHops)(implicit scope: Lineage.Scope): DataFrame = {
-    import graft.operators.Lineage.CpOps
-    val wq = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id"))
-    val top = lv.agg(
-      coalesce(min(when(col("lvl") >= 2, col("vec_id"))), min(col("vec_id"))).as("vec_id"))
-    var cur = queries.select(col("query_id")).crossJoin(broadcast(top))
-    for (g <- layers; _ <- 1 to descentHops) {
-      // no distinct before an argmax (r13 opt round): duplicate
-      // (query_id, vec_id) candidates score identically, and rn = 1
-      // picks one copy of the same winning row — the emitted row is
-      // bit-identical, one exchange cheaper per hop
-      val cand = cur
-        .unionAll(
-          cur.join(g, cur("vec_id") === g("src")).select(col("query_id"), col("dst").as("vec_id")))
-      cur = cand
-        .join(e, "vec_id")
-        .join(broadcast(queries), "query_id")
-        .select(
-          col("query_id"),
-          col("vec_id"),
-          round(expr("cosine_sim(embedding, q_emb)"), 6).as("cos"))
-        .withColumn("rnk", row_number().over(wq))
-        .filter(col("rnk") === 1)
-        .select("query_id", "vec_id")
-        .cp(false)
-    }
-    cur
+      symmetrize(exactKnnGraph(spark, dir, k).select("src", "dst")).cp(false),
+      hnswEntry(e, lv, queries, mUpper, DescentHops))
+    (beamWalk(e, queries, ent, Seq.fill(hops)(graph), lit(beam)).top10(), Seq.empty)
   }
 
   /** #415 HNSW recall-vs-beam scorecard (the §15.4 invariant — the
@@ -2492,9 +2433,9 @@ object Similarity {
     * recall@10 of [[hnswSearch]] against the #27 brute-force truth at
     * beam ∈ {5, 10, 16}, shared hops. Beam changes the TRAJECTORY
     * (unlike nprobe, the sweep points are not nested slices of one
-    * search), so each point is its own walk — but levels, upper
-    * graphs, the layer-0 graph, and the descent are built once and
-    * shared; the marginal cost per point is the k-bounded walk only.
+    * search), so each point is its own trajectory — but levels, upper
+    * graphs, the layer-0 graph, and the descent are built once, and
+    * all points ride one tagged walk ([[recallSweep]]).
     */
   def hnswRecallCurve(
       spark: SparkSession,
@@ -2512,23 +2453,9 @@ object Similarity {
     val (graph, (ent, truth)) = Lineage.par2(
       symmetrize(exactKnnGraph(spark, dir, 10).select("src", "dst")).cp(false),
       Lineage.par2(
-        {
-          val g2 = symmetrize(knnAmong(lv.filter(col("lvl") >= 2), mUpper)).cp(false)
-          val g1 = symmetrize(knnAmong(lv.filter(col("lvl") >= 1), mUpper)).cp(false)
-          hnswDescend(e, Seq(g2, g1), queries, lv).cp(false)
-        },
+        hnswEntry(e, lv, queries, mUpper, DescentHops),
         bruteForce(spark, dir).select("query_id", "vec_id").cp(false)))
-    val nTruthDf = truth.agg(count(lit(1)).as("n_truth"))
-    // r13: one fused sweep (see beamSweepHits) — per-beam trajectories
-    // and the oracle replay are unchanged
-    val out = beamSweepHits(e, graph, queries, ent, beams, hops, truth)
-      .crossJoin(broadcast(nTruthDf))
-      .select(
-        col("beam"),
-        col("n_truth"),
-        col("n_hits"),
-        expr("n_hits * 1000000 div n_truth").as("recall_e6"))
-    (out, Seq.empty)
+    (recallSweep(e, graph, queries, ent, beams, hops, truth), Seq.empty)
   }
 
   private[graft] val HnswBeamPoints = Seq(5, 10, 16)
@@ -2704,10 +2631,8 @@ object Similarity {
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val graph = scalableIndex(spark, e, kNbrs)._2
     val queries = queryVectors(spark, dir)
-    val ent = queries
-      .select(col("query_id"))
-      .crossJoin(broadcast(e.agg(min("vec_id").as("vec_id"))))
-    (beamWalk(e, graph, queries, ent, beam, hops), Seq.empty)
+    val ent = entryPerQuery(queries, e.agg(min("vec_id").as("vec_id")))
+    (beamWalk(e, queries, ent, Seq.fill(hops)(graph), lit(beam)).top10(), Seq.empty)
   }
 
   /** #449 HNSW search over the CELL-BOUNDED layer-0 — #414 with the
@@ -2732,12 +2657,9 @@ object Similarity {
     // r14: the cell-bounded index build and the upper-layer/descent
     // chain are independent — overlap them (guide §2.6)
     val (graph, ent) = Lineage.par2(
-      scalableIndex(spark, e, kNbrs)._2, {
-        val g2 = symmetrize(knnAmong(lv.filter(col("lvl") >= 2), mUpper)).cp(false)
-        val g1 = symmetrize(knnAmong(lv.filter(col("lvl") >= 1), mUpper)).cp(false)
-        hnswDescend(e, Seq(g2, g1), queries, lv)
-      })
-    (beamWalk(e, graph, queries, ent, beam, hops), Seq.empty)
+      scalableIndex(spark, e, kNbrs)._2,
+      hnswEntry(e, lv, queries, mUpper, DescentHops))
+    (beamWalk(e, queries, ent, Seq.fill(hops)(graph), lit(beam)).top10(), Seq.empty)
   }
 
   /** Score a (src, dst) candidate edge frame against the corpus: the
@@ -2993,13 +2915,11 @@ object Similarity {
       } else {
         val bg = knnAmong(base, k).cp(false)
         (bg, symmetrize(bg).cp(false))
-      }, {
-        val g2 = symmetrize(knnAmong(lvBase.filter(col("lvl") >= 2), HnswUpperM)).cp(false)
-        val g1 = symmetrize(knnAmong(lvBase.filter(col("lvl") >= 1), HnswUpperM)).cp(false)
-        hnswDescend(all, Seq(g2, g1), queries, lvBase, descentHops)
-      })
-    val visited = beamWalkVisited(all, g0, queries, entry, beam, hops).cp(false)
-    val walk = rankVisited(all, queries, visited).cp(false)
+      },
+      hnswEntry(all, lvBase, queries, HnswUpperM, descentHops))
+    val insertWalk = beamWalk(all, queries, entry, Seq.fill(hops)(g0), lit(beam))
+    val visited = insertWalk.visited.cp(false)
+    val walk = insertWalk.top10(visited).cp(false)
     // ---- delta lists: walk candidates ∪ exact within-batch pairs ----
     // broadcast NLJ over the batch (batch-bounded by contract — the
     // sanctioned broadcast pattern, never a CartesianProduct)
@@ -3229,9 +3149,7 @@ object Similarity {
       .select(col("p").as("src"), col("c").as("dst"), col("cos_e6"), col("rank"))
       .cp(false)
     val queries = e.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val entryAll = queries
-      .select(col("query_id"))
-      .crossJoin(broadcast(entry.select(col("vec_id"))))
+    val entryAll = entryPerQuery(queries, entry)
     // the prune's broadcast lookup side, materialized once for all
     // three prune invocations (a single ~corpus-sized row)
     val corp = corpusArray(e).cp(true)
@@ -3241,7 +3159,8 @@ object Similarity {
       // distinct below) — its former eager cpf materialized ~1M rows
       // through the stats-reset row roundtrip every round for nothing;
       // the per-hop lazy cuts inside the walk already bound the plan
-      val visited = beamWalkVisited(e, sym, queries, entryAll, VamanaBeam, VamanaHops)
+      val visited =
+        beamWalk(e, queries, entryAll, Seq.fill(VamanaHops)(sym), lit(VamanaBeam)).visited
       val cand = visited
         .select(col("query_id").as("p"), col("vec_id").as("c"))
         .unionAll(g.select(col("src").as("p"), col("dst").as("c")))
@@ -3280,27 +3199,13 @@ object Similarity {
       val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
       // r14: the Vamana build and the brute-force truth are
       // independent — overlap them (guide §2.6)
-      val (g, truth0) = Lineage.par2(
+      val (g, truth) = Lineage.par2(
         symmetrize(vamanaFrame(spark, dir, VamanaR).select("src", "dst")).cp(false),
         bruteForce(spark, dir).select("query_id", "vec_id").cp(false))
       val entry = vamanaEntry(e).cp(false)
       val queries = queryVectors(spark, dir)
-      val ent = queries
-        .select(col("query_id"))
-        .crossJoin(broadcast(entry.select(col("vec_id"))))
-      val truth = truth0
-      val nTruthDf = truth.agg(count(lit(1)).as("n_truth"))
-      // r13: ONE fused sweep — per-beam trajectories are bit-identical
-      // to the separate walks (the per-beam oracle replay is unchanged)
-      // but the graph is expanded/scored once per hop, not |beams| times
-      val out = beamSweepHits(e, g, queries, ent, beams, VamanaHops, truth)
-        .crossJoin(broadcast(nTruthDf))
-        .select(
-          col("beam"),
-          col("n_truth"),
-          col("n_hits"),
-          expr("n_hits * 1000000 div n_truth").as("recall_e6"))
-      (out, Seq.empty)
+      val ent = entryPerQuery(queries, entry)
+      (recallSweep(e, g, queries, ent, beams, VamanaHops, truth), Seq.empty)
     }
 
   /** #403 Matryoshka truncation recall curve (Kusupati et al. 2022:

@@ -696,10 +696,6 @@ object TextStats {
       .join(df_.filter(col("df") >= 2 && col("df") <= maxDf).select("term"), "term")
       .localCheckpoint(eager = true)
     val norms = kept.groupBy("doc_id").agg(sum(col("tf") * col("tf")).as("nrm2"))
-    // r14: the r13 fanOutBy(term) pin is gone — it doubled the query's
-    // driver-measured time at 32c (3.15 → 6.8 s) by defeating AQE
-    // coalescing on a tiny exchange; groupBy(term) shuffles by term
-    // anyway and AQE sizes the explosion stage from its bytes.
     val posting = kept
       .groupBy("term")
       .agg(array_sort(collect_list(struct(col("doc_id"), col("tf")))).as("ps"))

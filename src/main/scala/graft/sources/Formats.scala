@@ -112,12 +112,6 @@ object Formats {
         (col("r.ts") * 1000000L).as("registered_at"),
         upper(col("r.type")).as("op"))
 
-  /** JSONL reader with explicit schema (schema inference is a full
-    * extra scan at 100 TB — never rely on it).
-    */
-  def readJsonl(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).json(path)
-
   /** #92 Quarantine reader: JSONL parsed PERMISSIVE with malformed
     * lines routed to a dead-letter frame instead of poisoning the
     * batch — the ingest-robustness pattern every production CDC feed

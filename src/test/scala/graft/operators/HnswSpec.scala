@@ -1,8 +1,11 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.operators.Lineage.CpOps
 
 /** #414/#415 — HNSW layering over the NSW graph. The §15.4 contract:
   * the approximation ships with its measured scorecard, and the spec
@@ -84,5 +87,82 @@ class HnswSpec extends SparkSpec {
     assert(rows(5L) >= 970000L, s"beam=5 recall ${rows(5L)} under the measured floor")
     assert(rows(10L) >= 990000L, s"beam=10 recall ${rows(10L)} under the measured floor")
     assert(rows(16L) >= rows(10L) - 10000L, "beam=16 collapsed below beam=10")
+  }
+
+  test("tagged walk: each beam tag replays the untagged walk; width 1 is the argmax descent") {
+    import spark.implicits._
+    def rows(df: DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq).toSet
+    def assertSame(got: DataFrame, want: DataFrame, what: String): Set[Seq[Any]] = {
+      val (g, w) = (rows(got), rows(want))
+      val diff = (g diff w) ++ (w diff g)
+      assert(diff.isEmpty, s"$what: ${diff.size} rows differ, e.g. ${diff.take(3)}")
+      w
+    }
+    Lineage.checkpointReleasing(spark) { implicit scope =>
+      graft.functions.GraftFunctions.register(spark)
+      val e = graft.Tables.embeddings(spark, sf).select("vec_id", "embedding")
+      val queries = Similarity.queryVectors(spark, sf)
+      val lv = Similarity.hnswLevels(spark, sf)
+
+      // the width-1 walk over (g2 × hops, g1 × hops) vs an explicit
+      // row_number = 1 argmax per hop over the same layers
+      val ent = Similarity.hnswEntry(e, lv, queries, Similarity.HnswUpperM, Similarity.DescentHops)
+      val wq = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id"))
+      var cur = queries
+        .select("query_id")
+        .crossJoin(lv.agg(
+          coalesce(min(when(col("lvl") >= 2, col("vec_id"))), min(col("vec_id"))).as("vec_id")))
+      for (l <- Seq(2, 1)) {
+        val g = Similarity.symmetrize(
+          Similarity.knnAmong(lv.filter(col("lvl") >= l), Similarity.HnswUpperM)).cp(false)
+        for (_ <- 1 to Similarity.DescentHops) {
+          val expanded = cur.join(g, cur("vec_id") === g("src"))
+          cur = cur
+            .unionAll(expanded.select(col("query_id"), col("dst").as("vec_id")))
+            .join(e, "vec_id")
+            .join(queries, "query_id")
+            .select(
+              col("query_id"),
+              col("vec_id"),
+              round(expr("cosine_sim(embedding, q_emb)"), 6).as("cos"))
+            .withColumn("rn", row_number().over(wq))
+            .filter(col("rn") === 1)
+            .select("query_id", "vec_id")
+            .cp(false)
+        }
+      }
+      val entries = assertSame(ent, cur, "width-1 walk vs the row_number = 1 argmax descent")
+      assert(entries.size == 10, "one descent entry per query")
+
+      // one walk tagged by beam vs one untagged walk per width, same
+      // graph and entry: per-beam visited SET and ranked top-10 agree
+      val graph =
+        Similarity.symmetrize(Similarity.exactKnnGraph(spark, sf).select("src", "dst")).cp(false)
+      val hops = Seq.fill(4)(graph)
+      val beams = Similarity.HnswBeamPoints.map(_.toLong)
+      val tagged = Similarity.beamWalk(
+        e,
+        queries,
+        ent.crossJoin(beams.toDF("beam")).select("query_id", "beam", "vec_id"),
+        hops,
+        col("beam"),
+        Seq("beam"))
+      val visitedByBeam = beams.map { b =>
+        val one = Similarity.beamWalk(e, queries, ent, hops, lit(b))
+        val visited = assertSame(
+          tagged.visited.filter(col("beam") === b).select("query_id", "vec_id").distinct(),
+          one.visited.select("query_id", "vec_id").distinct(),
+          s"beam $b visited set, tagged vs untagged")
+        val top = assertSame(
+          tagged.top10().filter(col("beam") === b).select("query_id", "vec_id", "cos", "rank"),
+          one.top10().select("query_id", "vec_id", "cos", "rank"),
+          s"beam $b top-10, tagged vs untagged")
+        assert(top.size == 100, s"beam $b: 10 ranked rows per query")
+        visited
+      }
+      // non-vacuous: the widths walk different trajectories
+      assert(visitedByBeam.head.size < visitedByBeam.last.size)
+      (spark.emptyDataFrame, Seq.empty)
+    }
   }
 }
